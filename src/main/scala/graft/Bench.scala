@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -44,41 +44,21 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Spill-aware shuffle sizing — the 100 TB rule applied at bench
-    // SF: partitions ≈ on-disk input bytes / 4 MB (parquet text
-    // decompresses ~4-8×, so one partition carries ~16-32 MB in
-    // flight), floored at 8, capped at 4× cores. Core-count-sized
-    // shuffles of kilobyte partitions are pure scheduling overhead:
-    // interleaved in-JVM minima (ProfileFloor) showed 20-25% total
-    // savings at sf0.1 across floor, heavy, AND streaming families,
-    // with no family regressing. At 100 TB the same rule (with a
-    // cluster-scale cap) yields the thousands of partitions you'd
-    // expect — the constant is the target partition payload, not the
-    // partition count.
-    def walkBytes(f: java.io.File): Long =
-      if (f.isDirectory) { val c = f.listFiles(); if (c == null) 0L else c.map(walkBytes).sum }
-      else f.length()
-    val shufflePartitions = math.min(
-      math.max(walkBytes(new java.io.File(sfDir)) / (4L << 20), 8L),
-      4L * cpus.toInt).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Session.registerLateRules(spark)
+    // input-sized shuffle partitions: see Session.inputPartitions
+    val spark = Session.forRun(sfDir, "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def runOnce(name: String): Double = {
+    // −1 marks a failed observation; a gate with no successful one is
+    // excluded from `total` and listed under `failed`, never dropped
+    // silently
+    def runOnce(name: String, dir: String = sfDir): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
+      try SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed at $dir: ${e.getMessage}")
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -151,6 +131,10 @@ object Bench {
       "\"" + (if (useShort) shortKey(k) else k) + "\":" + fmt(v)
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = results.filter(_._2 < 0).map(_._1)
+    def failedJson(ns: Seq[String]): String =
+      s""""n_failed":${failed.size},"failed":""" + ns.map(n =>
+        "\"" + (if (useShort) shortKey(n) else n) + "\"").mkString("[", ",", "],")
     def lineWith(qs: String, extra: String): String =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
         s""""passes":3,"spread_p50":${fmt(quantile(0.5))},""" +
@@ -160,7 +144,7 @@ object Bench {
     // only the LAST ~2000 chars of stdout (BENCH_r12 captured a
     // decapitated line → parsed:null), so the full line can never be
     // the stdout line again
-    val fullLine = lineWith(queryJson(results), "")
+    val fullLine = lineWith(queryJson(results), failedJson(failed))
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: java.io.IOException => () }
@@ -178,10 +162,16 @@ object Bench {
     val headline = results.filter(_._1.startsWith("q")) ++
       xQueries.filter(_._2 >= 0).sortBy(-_._2).take(20)
     val xTotal = xQueries.map(_._2).filter(_ >= 0).sum
-    val line = lineWith(queryJson(headline),
+    // `failed` is cut to what fits the tail (n_failed stays exact; the
+    // full list is in BENCH_LAST.json)
+    def stdoutLine(nFailedShown: Int): String = lineWith(queryJson(headline),
       s""""x_total":${fmt(xTotal)},"n_queries":${results.size},""" +
-        s""""cpus":$cpus,"shuffle_partitions":$shufflePartitions,""" +
+        s""""cpus":${Session.cpus},""" +
+        s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+        failedJson(failed.take(nFailedShown)) +
         """"full_map":"BENCH_LAST.json",""")
+    val line = (failed.size to 0 by -1).iterator.map(stdoutLine)
+      .find(_.length <= 2000).getOrElse(stdoutLine(0))
     // Startup-vs-per-row split for the streaming gates: a Structured
     // Streaming gate pays a near-constant startup (state-store init,
     // micro-batch planning, source listing) that dominates at fixture
@@ -199,18 +189,11 @@ object Bench {
       "x47b_stream_outer_join", "x49b_kafka_stream")
     val tinyDir = "/root/testdata/sf0.001"
     val resultMap = results.toMap
-    def runOnceAt(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
     val streamSplit =
       if (!new java.io.File(tinyDir).isDirectory) Seq.empty[(String, (Double, Double))]
       else streamingGateNames.filter(resultMap.contains).map { name =>
         System.gc()
-        val obs = Seq(runOnceAt(name, tinyDir), runOnceAt(name, tinyDir)).filter(_ >= 0)
+        val obs = Seq(runOnce(name, tinyDir), runOnce(name, tinyDir)).filter(_ >= 0)
         val startup = if (obs.isEmpty) -1.0 else obs.min
         val full = resultMap(name)
         val perRows =

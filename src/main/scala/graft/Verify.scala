@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs under
+  * the same [[Session.forRun]] config as Bench, so the oracle contract
+  * is checked under the configuration that is benchmarked. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // driver contract: (sfDir, outDir); an optional third arg filters
@@ -12,23 +13,11 @@ object Verify {
       case Array(s, o, f) => (s, o, f)
     }
     val nameFilters = nameFilter.split(',').filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Session.registerLateRules(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.forRun(sfDir, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        nameFilters.isEmpty || nameFilters.exists(name.contains) }
-      .foreach { case (name, fn) =>
+    val selected = SparkEntry.queries.filter { case (name, _) =>
+      nameFilters.isEmpty || nameFilters.exists(name.contains) }
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -47,7 +36,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // only the oracles of the queries that ran: tools/check.py counts
+    // an oracle entry without an output dir as a FAIL
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -46,7 +46,7 @@ private[graft] object GateSupport {
     * batch-cadence-invariant by contract (the oracle replays one batch
     * SQL statement), and every additional micro-batch costs the full
     * per-trigger constant (~0.35 s measured: addBatch + state commit +
-    * offset/commit-log writes — ProfileStream on x119) while
+    * offset/commit-log writes — `Profile --stream` on x119) while
     * demonstrating nothing the previous batches didn't. 4 data files
     * = 3 in-stream watermark advances + the trailing no-data batch:
     * still a multi-batch replay that fires eviction/finalization on
@@ -250,27 +250,25 @@ private[graft] object GateSupport {
     * these are one-shot AvailableNow replays whose checkpoint dir is
     * deleted the moment the query finishes, so retaining the default
     * 100 batches of state/WAL files for a recovery that can never
-    * happen buys nothing — the setting states the gates' lifecycle,
-    * and a long-lived production stream keeps its SLA-driven retention
-    * via SPARK_GRAFT_STREAM_RETAIN. Measured HONESTLY (round 16,
-    * plans/r16/ab_stream.txt + the retain-env bench A/B): the
-    * fixed-variant-order in-JVM A/B suggested 0.08-0.45 s/gate, but a
-    * same-protocol bench subset with SPARK_GRAFT_STREAM_RETAIN=100 vs
-    * 1 came out a WASH (±2% family-wide) — the A/B's constant variant
-    * order (retain1 always directly after default) likely manufactured
-    * the gap, so retention is recorded NEUTRAL at gate state size, not
-    * a win. The same experiments did settle the rest of the lever
+    * happen buys nothing — the setting states the gates' lifecycle
+    * (a long-lived production stream keeps its SLA-driven retention).
+    * Measured HONESTLY (round 16, plans/r16/ab_stream.txt + a bench
+    * A/B of retention 100 vs 1): the fixed-variant-order in-JVM A/B
+    * suggested 0.08-0.45 s/gate, but a same-protocol bench subset came
+    * out a WASH (±2% family-wide) — the A/B's constant variant order
+    * (retain1 always directly after default) likely manufactured the
+    * gap, so retention is recorded NEUTRAL at gate state size, not a
+    * win. The same experiments did settle the rest of the lever
     * space: RocksDBStateStoreProvider (±changelog checkpointing) is
     * neutral-to-WORSE here (x47b 2.85→3.44 — 16 tiny stores pay
     * RocksDB's per-instance open/commit constants), and
     * maintenanceInterval/minDeltasForSnapshot move nothing. */
   def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val RETAIN = "spark.sql.streaming.minBatchesToRetain"
-    val retain = sys.env.getOrElse("SPARK_GRAFT_STREAM_RETAIN", "1")
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevRetain = s.conf.getOption(RETAIN)
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    s.conf.set(RETAIN, retain)
+    s.conf.set(RETAIN, "1")
     try body finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
       prevRetain match {
@@ -282,22 +280,17 @@ private[graft] object GateSupport {
 
   /** Data-sized state-store parallelism: one state-store instance per
     * ~1.5 MB of staged parquet input, clamped to [4, 16]. Measured on
-    * the sf1 session-window stream (TimeX18): 4 partitions 6.6-9.8 s,
-    * 8 partitions 3.7-5.9 s, 16 noisy, 32 collapses to 20-40 s under
+    * the sf1 session-window stream (a state-partition sweep): 4
+    * partitions 6.6-9.8 s, 8 partitions 3.7-5.9 s, 16 noisy, 32 collapses to 20-40 s under
     * per-store per-batch commit overhead — so the clamp ceiling is as
     * load-bearing as the floor. At fixture scale (sf0.1 events
     * ≈ 1.2 MB) this stays at the minimum; at sf1 (≈ 12 MB) it lands
     * on the measured sweet spot of 8. Same bytes-per-partition rule
-    * Bench applies to batch shuffles: the constant is the
-    * per-partition payload, not the partition count. */
-  def streamPartitionsFor(stagedDir: String): Int = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    math.min(16L,
-      math.max(4L, walk(new java.io.File(stagedDir)) / 1500000L)).toInt
-  }
+    * Session.inputPartitions applies to batch shuffles: the constant is
+    * the per-partition payload, not the partition count. */
+  def streamPartitionsFor(stagedDir: String): Int =
+    math.min(16L, math.max(4L,
+      graft.Session.inputBytes(new java.io.File(stagedDir)) / 1500000L)).toInt
 
   /** DuckDB list literal from a Scala word list (single source of
     * truth: the oracle uses the same stopword constants as the Spark

@@ -1,44 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved-close benchmark server (tools/close_bench.py drives
   * it): one long-lived Spark session that runs a named gate per stdin
   * line and answers `TIME <name> <sec>`. The python side alternates
   * each Spark observation with the SAME query's DuckDB observation,
   * so a minute-scale host-load window inflates both engines of a pair
   * together and per-(query,engine) minima stay comparable — the
-  * ProfileFloor protocol promoted to how close artifacts are made
-  * (round-12 verdict task: two consecutive close rounds were polluted
-  * by ±35% host weather).
+  * interleaved protocol of `Profile --ab` promoted to how close
+  * artifacts are made (round-12 verdict task: two consecutive close
+  * rounds were polluted by ±35% host weather).
   *
   * Protocol: `LIST` → one `QUERY <name>` line per gate + `DONE`;
   * `GC` → System.gc() + `OK`; `<gate name>` → runs through the noop
   * sink, `TIME <name> <sec>` (−1 on error); `EXIT` → `BYE`.
-  * Session config mirrors [[graft.Bench]] (input-sized shuffle
-  * partitions, AQE on, UTC).
+  * Session config is [[graft.Bench]]'s: [[graft.Session.forRun]].
   */
 object BenchServe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def walkBytes(f: java.io.File): Long =
-      if (f.isDirectory) {
-        val c = f.listFiles(); if (c == null) 0L else c.map(walkBytes).sum
-      } else f.length()
-    val shufflePartitions = math.min(
-      math.max(walkBytes(new java.io.File(sfDir)) / (4L << 20), 8L),
-      4L * cpus.toInt).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.Session.registerLateRules(spark)
+    val spark = graft.Session.forRun(sfDir, "graft-bench-serve")
     spark.sparkContext.setLogLevel("ERROR")
 
     val out = new java.io.PrintWriter(

@@ -9,12 +9,8 @@ package graft.tools
   */
 object ExtensionsCheck {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-check")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Session.local registers no function outside spark.sql.extensions
+    val spark = graft.Session.local("graft-extensions-check", cores = 2)
     spark.sparkContext.setLogLevel("ERROR")
     try {
       // every registered function, called through pure SQL \u2014 no

@@ -1,12 +1,18 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import graft.operators.{Dedup, SemDedup, SpanDedup}
+import graft.expressions.NativeText
 
 /** Scale-exactness checks for the gates whose DuckDB oracles are
   * unrunnable past gate scale (declared-quadratic or sketch-replay
-  * class): `ScaleChecks <sfDir> [check ...]` with checks from
-  * {x98, x88b, x102, x104}. Each check re-runs the REAL gate query at the
-  * given scale and asserts the gate's invariant structurally:
+  * class), plus the at-scale operator stress invariants:
+  * `ScaleChecks <sfDir> [check ...]` (default x98 x88b x102 x104).
+  * Runs on [[graft.Session.forRun]]. Each gate check re-runs the REAL
+  * gate query at the given scale and asserts the gate's invariant
+  * structurally:
   *
   *  - x98: quantile audit — `within_alpha` must hold (the audit's
   *    exact side now rank-selects distributed; this run is also the
@@ -30,13 +36,40 @@ import org.apache.spark.sql.functions._
   *    be exactly the SQL NTILE sizes derived from each group's n_g
   *    (first n_g mod k buckets one row larger), under whatever
   *    partitioning the range-rank machinery produced.
+  *
+  * The stress checks run operators directly on replica datasets
+  * (tools/gen_scale.py: sf0.1 rows replicated R× under fresh ids):
+  *
+  *  - chain-cc: distributed connected components on a PATH graph
+  *    0-1-…-(n-1) (n = 1M), the worst case for iterative CC — the
+  *    Kiveris large-star/small-star alternation must halve the
+  *    diameter each round with nothing shortcutting it. Pins exact
+  *    labels: component 0 for the single chain, each segment's
+  *    minimum id for 1000 disjoint chains. Ignores the sfDir;
+  *  - dedup-star: the near-dup pair graph of the replica documents
+  *    (every original becomes an R-clique; at R=10 past the 100k
+  *    driver cap, so the star CC branch engages); its labels must
+  *    agree with the driver union-find on the same pairs (up to 2M
+  *    pairs — past that the driver collect is what this exists to
+  *    avoid, and the replica invariant applies: gen_scale replicas
+  *    only merge copies of one original, so the component count is
+  *    R-invariant), then
+  *    dedupNearDups / dedupIncremental run end-to-end at the default
+  *    cap;
+  *  - semdedup: replica embeddings are exact copies, which always get
+  *    identical cell assignments, so survivors == distinct originals
+  *    exactly, whatever the k-means quality;
+  *  - span-dedup: every ≥k-token document has R exact copies, so it
+  *    must come out EXACTLY fully covered — one span [0, ntok) — and
+  *    rewrite to an empty kept_text (checked with aggregates, never a
+  *    collect).
   */
 object ScaleChecks {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")
     val checks = if (args.length > 1) args.drop(1).toSeq
       else Seq("x98", "x88b", "x102", "x104")
-    val spark = graft.Session.local("scale-checks")
+    val spark = graft.Session.forRun(dir, "scale-checks")
     spark.sparkContext.setLogLevel("ERROR")
 
     def timed[A](name: String)(f: => A): A = {
@@ -44,6 +77,11 @@ object ScaleChecks {
       val r = f
       println(f"[$name] ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
+    }
+    def pinned(df: => org.apache.spark.sql.DataFrame) = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      p.count()
+      p
     }
 
     checks.foreach {
@@ -147,6 +185,141 @@ object ScaleChecks {
         }
         println(s"[x115] groups=${out.map(_.getString(0)).distinct.length} " +
           s"rows_total=${out.map(_.getLong(2)).sum} NTILE sizes exact")
+      }
+      case "chain-cc" => timed("chain-cc") {
+        val n = 1000000L
+        val segments = 1000
+        // 1. single path 0-1-…-(n-1): diameter n-1, one component
+        val path = spark.range(n - 1)
+          .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+        val labels = timed(s"chain-cc path n=$n") {
+          pinned(Dedup.connectedComponentsStar(path))
+        }
+        val nLabels = labels.count()
+        val bad = labels.where(col("component") =!= 0L).count()
+        println(s"[chain-cc] path: labels=$nLabels (want $n) wrong-component=$bad")
+        require(nLabels == n && bad == 0L, "path labels wrong")
+        labels.unpersist()
+        // 2. segmented: `segments` disjoint chains (diameter n/segments)
+        //    — component must be each segment's minimum id
+        val segLen = n / segments
+        val seg = spark.range(n - 1)
+          .where((col("id") + 1) % segLen =!= 0)
+          .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+        val segLabels = timed(s"chain-cc $segments chains of $segLen") {
+          pinned(Dedup.connectedComponentsStar(seg))
+        }
+        val segBad = segLabels
+          .where(col("component") =!= (col("id") - (col("id") % segLen))).count()
+        val nComp = segLabels.select("component").distinct().count()
+        println(s"[chain-cc] segmented: components=$nComp (want ~$segments) " +
+          s"wrong-component=$segBad")
+        require(segBad == 0L, "segment labels wrong")
+        segLabels.unpersist()
+      }
+      case "dedup-star" => timed("dedup-star") {
+        val docs = graft.sources.Tables.load(spark, dir, "documents")
+        val nDocs = docs.count()
+        val pairs = timed("dedup-star lshHybridPairs") {
+          pinned(Dedup.lshHybridPairs(docs, 0.8, "doc_id", "text"))
+        }
+        val nPairs = pairs.count()
+        println(s"[dedup-star] docs=$nDocs pairs=$nPairs (driver cap 100000; " +
+          s"distributed branch ${if (nPairs > 100000) "ENGAGES" else "DOES NOT ENGAGE"})")
+        val starLabels = timed("dedup-star connectedComponentsStar") {
+          pinned(Dedup.connectedComponentsStar(pairs))
+        }
+        val nStar = starLabels.count()
+        val nComponents = starLabels.select("component").distinct().count()
+        if (nPairs <= 2000000) {
+          val driverLabels = timed("dedup-star driver union-find") {
+            // far above the pair count but NOT Int.MaxValue (the
+            // adaptive probe takes driverCap+1 rows, which must not
+            // overflow)
+            pinned(Dedup.connectedComponentsAdaptive(pairs, driverCap = 10000000))
+          }
+          val mismatches = starLabels.as("a")
+            .join(driverLabels.as("b"), Seq("id"))
+            .where(col("a.component") =!= col("b.component")).count()
+          println(s"[dedup-star] labels=$nStar components=$nComponents " +
+            s"label mismatches vs driver union-find=$mismatches")
+          require(mismatches == 0, "star CC disagrees with driver union-find")
+          driverLabels.unpersist()
+        } else {
+          println(s"[dedup-star] labels=$nStar components=$nComponents " +
+            "(driver cross-check skipped past 2M pairs; replica invariant applies)")
+        }
+        pairs.unpersist(); starLabels.unpersist()
+        // the production entry points with the DEFAULT cap, so the
+        // adaptive fall-through takes the star branch itself
+        val survivors = timed("dedup-star dedupNearDups") {
+          Dedup.dedupNearDups(docs, 0.8).count()
+        }
+        val batchLo = nDocs / 10 * 9 // last replica's id range = the batch
+        val admitted = timed("dedup-star dedupIncremental") {
+          Dedup.dedupIncremental(
+            docs.where(col("doc_id") >= batchLo),
+            docs.where(col("doc_id") < batchLo), 0.8).count()
+        }
+        println(s"[dedup-star] dedupNearDups survivors=$survivors " +
+          s"dedupIncremental admitted=$admitted of ${nDocs - batchLo}")
+      }
+      case "semdedup" => timed("semdedup") {
+        val emb = graft.sources.Tables.load(spark, dir, "embeddings")
+        val n = emb.count()
+        val distinctVecs = emb.select(col("embedding")).distinct().count()
+        val k = math.max(4, math.sqrt(n.toDouble).toInt)
+        println(s"[semdedup] vectors=$n distinct=$distinctVecs k=$k")
+        val idx = timed("semdedup Ivf.train") {
+          graft.functions.Ivf.train(emb, k, iters = 3)
+        }
+        val pairs = timed("semdedup semanticPairs") {
+          pinned(SemDedup.semanticPairs(emb, idx, threshold = 0.99, probes = 2))
+        }
+        val nPairs = pairs.count()
+        println(s"[semdedup] pairs=$nPairs (driver cap 100000; distributed " +
+          s"branch ${if (nPairs > 100000) "ENGAGES" else "DOES NOT ENGAGE"})")
+        val comps = timed("semdedup connectedComponentsAdaptive") {
+          pinned(Dedup.connectedComponentsAdaptive(pairs))
+        }
+        val nComponents = comps.select(col("component")).distinct().count()
+        pairs.unpersist(); comps.unpersist()
+        val survivors = timed("semdedup end-to-end") {
+          SemDedup.semDedup(emb, k, threshold = 0.99, probes = 2,
+            indexKey = Some(s"semdedup-stress:$dir")).count()
+        }
+        println(s"[semdedup] components=$nComponents survivors=$survivors " +
+          s"(invariant: survivors == distinct originals == $distinctVecs)")
+        if (survivors != distinctVecs)
+          throw new IllegalStateException(
+            s"SemDedup invariant violated: $survivors survivors, expected $distinctVecs")
+      }
+      case "span-dedup" => timed("span-dedup") {
+        val docs = graft.sources.Tables.load(spark, dir, "documents")
+        val k = 15
+        val eligible = docs.where(NativeText.tokenCount(col("text")) >= k).count()
+        val spans = timed("span-dedup duplicatedSpans") {
+          SpanDedup.duplicatedSpans(docs, k).localCheckpoint()
+        }
+        val nSpans = spans.count()
+        // invariant 1: one span per eligible doc, covering [0, ntok)
+        val bad = spans
+          .join(docs.select(col("doc_id"),
+            NativeText.tokenCount(col("text")).as("ntok")), Seq("doc_id"))
+          .where(col("span_start") =!= 0 || col("span_end") =!= col("ntok"))
+          .count()
+        val agg = timed("span-dedup removeSpans") {
+          SpanDedup.removeSpans(docs, spans).agg(
+            count(lit(1)).as("n"),
+            sum(when(col("kept_text") === "", 1).otherwise(0)).as("empty"),
+            sum(col("n_removed")).as("removed")).head()
+        }
+        println(s"[span-dedup] eligible=$eligible spans=$nSpans badSpans=$bad " +
+          s"docs=${agg.getLong(0)} fullyEmptied=${agg.getLong(1)} " +
+          s"tokensRemoved=${agg.getLong(2)}")
+        assert(nSpans == eligible, s"expected one full span per eligible doc")
+        assert(bad == 0, "a span failed the full-coverage invariant")
+        assert(agg.getLong(1) == eligible, "an eligible doc kept text")
       }
       case other => sys.error(s"unknown check: $other")
     }

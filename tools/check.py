@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Local self-check mirroring the driver's correctness gate:
-runs Verify output parquet against DuckDB oracle_sql.json.
+runs Verify output parquet against DuckDB oracle_sql.json. An oracle
+entry with no Verify output dir (the query threw) is a FAIL.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
@@ -14,6 +15,9 @@ for t in ["region","nation","customer","supplier","part","orders",
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails, passes, skips = [], [], []
+for name in sorted(oracle):
+    if not os.path.isdir(os.path.join(out, name)):
+        fails.append((name, "no Verify output"))
 for name in sorted(os.listdir(out)):
     pdir = os.path.join(out, name)
     if not os.path.isdir(pdir):
