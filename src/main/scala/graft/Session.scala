@@ -8,7 +8,11 @@ import org.apache.spark.sql.SparkSession
   * for a multi-executor cluster): AQE on so runtime re-planning (skew
   * join, coalesce partitions, broadcast demotion) behaves like it would
   * on a 1000-executor cluster; shuffle partitions sized instead of the
-  * 200 default; UTC session time zone for oracle parity.
+  * 200 default; UTC session time zone for oracle parity. The `file:`
+  * scheme is bound to [[graft.fs.NioLocalFileSystem]] /
+  * [[graft.fs.NioLocalFs]], which set permissions and read links
+  * in-process instead of forking `chmod`/`readlink` per file; HDFS,
+  * S3 and every other scheme are untouched.
   *
   *  - [[local]] sizes shuffles to the core count (tests, demos, tools
   *    that run no fixed input);
@@ -79,6 +83,10 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // `file:` without the per-file chmod/readlink forks (graft.fs)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.fs.NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     registerLateRules(spark)

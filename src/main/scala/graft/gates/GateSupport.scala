@@ -45,9 +45,16 @@ private[graft] object GateSupport {
     * Default 4 files (round 15): the bounded-state gates' result is
     * batch-cadence-invariant by contract (the oracle replays one batch
     * SQL statement), and every additional micro-batch costs the full
-    * per-trigger constant (~0.35 s measured: addBatch + state commit +
-    * offset/commit-log writes — `Profile --stream` on x119) while
-    * demonstrating nothing the previous batches didn't. 4 data files
+    * per-trigger constant while demonstrating nothing the previous
+    * batches didn't. That constant (~0.35 s in round 15, `Profile
+    * --stream` on x119) was mostly process starts, not Spark work:
+    * without libhadoop, stock Hadoop forked `chmod` per created file
+    * and `readlink` per `FileContext` rename, 3-5 ms each, on every
+    * state-store delta/checksum file and offset/commit-log entry
+    * (2,347 starts over 3 rounds of the six cold benchmark gates).
+    * With `graft.fs` doing both in-process the cold benchmark's traced
+    * pass (seed 77, 4 cores) went from trigger p50 532 → 276 ms, state
+    * commit 429 → 42 ms, walCommit 48 → 3 ms per trigger. 4 data files
     * = 3 in-stream watermark advances + the trailing no-data batch:
     * still a multi-batch replay that fires eviction/finalization on
     * every path (gate `require`s + StreamingSpec state-bound asserts
@@ -140,11 +147,14 @@ private[graft] object GateSupport {
 
   /** Scratch dir for staging/checkpoints, preferring tmpfs (/dev/shm)
     * over java.io.tmpdir. Measured neutral vs disk-backed /tmp at
-    * fixture scale (the page cache absorbs the state-store commit
-    * writes either way); kept because tmpfs scratch can never leave
-    * stale checkpoint litter on disk. A cluster deployment points
-    * checkpoints at durable storage instead — this is local-mode
-    * scratch placement, not a semantics change. */
+    * fixture scale because the state-store commit cost was per-file
+    * `chmod`/`readlink` process starts (stock Hadoop without
+    * libhadoop), which tmpfs does not make cheaper; `graft.fs` removed
+    * them (state commit 429 → 42 ms per trigger on the cold benchmark).
+    * Kept because tmpfs scratch can never leave stale checkpoint litter
+    * on disk. A cluster deployment points checkpoints at durable
+    * storage instead — this is local-mode scratch placement, not a
+    * semantics change. */
   def scratchDir(prefix: String): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base =
@@ -260,9 +270,15 @@ private[graft] object GateSupport {
     * gap, so retention is recorded NEUTRAL at gate state size, not a
     * win. The same experiments did settle the rest of the lever
     * space: RocksDBStateStoreProvider (±changelog checkpointing) is
-    * neutral-to-WORSE here (x47b 2.85→3.44 — 16 tiny stores pay
-    * RocksDB's per-instance open/commit constants), and
-    * maintenanceInterval/minDeltasForSnapshot move nothing. */
+    * neutral-to-WORSE here (x47b 2.85→3.44), and
+    * maintenanceInterval/minDeltasForSnapshot move nothing. The
+    * "per-instance constants" both providers paid were mostly process
+    * starts: a JFR recording of x47b (sf0.01, `Profile --runs 4 --ab`
+    * over the two providers, 4 cores) counted 9,957 (7,040 `readlink`,
+    * 2,456 `chmod` from stock Hadoop's `file:` without libhadoop, 458
+    * `rm`). With `graft.fs` 463 remain, 460 of them Spark's own
+    * `rm -rf` of RocksDB working dirs, and the minima fell HDFS
+    * 5.05 → 2.63 s, RocksDB 5.96 → 3.08 s: RocksDB still trails. */
   def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val RETAIN = "spark.sql.streaming.minBatchesToRetain"
     val prev = s.conf.get("spark.sql.shuffle.partitions")

@@ -2,19 +2,22 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
+
+import graft.fs.NioRawLocalFileSystem
 
 /** Test-only Hadoop filesystem for fault-injecting the atomic-swap
   * paths in `Catalog.merge` / `Catalog.compact`: behaves exactly like
-  * the local filesystem (so Spark parquet read/write and the
-  * committer run for real), except that `rename` FAILS (returns
+  * the production local filesystem ([[NioRawLocalFileSystem]], the raw
+  * layer `graft.Session` binds to `file:`), so Spark parquet read/write
+  * and the committer run for real, except that `rename` FAILS (returns
   * false, the Hadoop contract for a failed rename) whenever the
   * injected predicate matches. Registered under the `faulty://`
   * scheme via `fs.faulty.impl`; the predicate lives in the companion
   * so one setting reaches the FileSystem.get-cached instance and, in
   * local mode, every executor thread.
   */
-class FaultInjectingFileSystem extends RawLocalFileSystem {
+class FaultInjectingFileSystem extends NioRawLocalFileSystem {
   override def getScheme: String = "faulty"
   override def getUri: URI = URI.create("faulty:///")
 
